@@ -1,12 +1,12 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {key: sec for the 10 slowest keys}, "sf": ..., "n_keys": ...,
-"all_total": ..., "queries_full": "BENCH_out*.json"}. The FULL per-key
-timing map is written to BENCH_out*.json (mode-suffixed); stdout stays
-under 1.5 kB so the driver's stdout-tail capture always parses it
-(VERDICT r9 item 2 — the 6 kB full map got front-clipped three rounds
-running).
+"queries": {key: sec for the 10 slowest keys}, "sf": ..., "sf_dir": ...,
+"cpus": ..., "n_keys": ..., "all_total": ..., "queries_full":
+"BENCH_out*.json"}. The FULL per-key timing map is written to
+BENCH_out*.json (mode-suffixed); stdout stays under 1.5 kB so the
+driver's stdout-tail capture always parses it (VERDICT r9 item 2 — the
+6 kB full map got front-clipped three rounds running).
 
 Each query is executed to completion through a `noop`-format write: every
 result column is fully computed and materialized executor-side, so Catalyst
@@ -310,12 +310,7 @@ def main(argv: list[str] | None = None) -> None:
         " CAST(0 AS BIGINT), (acc, x) -> acc + length(x.w1)) AS s"
     ).agg({"s": "sum"}).collect()
 
-    timings: dict[str, float] = {}
-    for key in keys:
-        t0 = time.perf_counter()
-        df = qs[key](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[key] = round(time.perf_counter() - t0, 3)
+    timings = timed_pass(spark, qs, keys, sf_dir)
 
     # --repeats N (additive, VERDICT r18 item 2): N-1 EXTRA full passes
     # over the same key list, so the repeats of any one key are separated
@@ -326,11 +321,8 @@ def main(argv: list[str] | None = None) -> None:
     # apart from two scalar value_min/all_total_min additions).
     rep_ts: dict[str, list[float]] = {k: [v] for k, v in timings.items()}
     for _ in range(opts.repeats - 1):
-        for key in keys:
-            t0 = time.perf_counter()
-            df = qs[key](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            rep_ts[key].append(round(time.perf_counter() - t0, 3))
+        for key, t in timed_pass(spark, qs, keys, sf_dir).items():
+            rep_ts[key].append(t)
 
     headline_total = round(
         sum(t for k, t in timings.items() if k in set(HEADLINE)), 3
@@ -344,6 +336,8 @@ def main(argv: list[str] | None = None) -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "sf_dir": sf_dir,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     if run_all:
         out["all_total"] = round(sum(timings.values()), 3)
@@ -393,6 +387,29 @@ def main(argv: list[str] | None = None) -> None:
     os.close(real_stdout)
 
 
+def timed_pass(spark, qs: dict, keys: list[str], sf_dir: str) -> dict[str, float]:
+    """Time each key once, built and written through a ``noop`` sink, then
+    release the RDDs the pass left persisted (eager ``localCheckpoint``
+    builds), so every ``--repeats`` pass starts from the cache state pass 0
+    started from. The release is once per pass, after its last key: a
+    release after every key measured as a penalty on the sweep
+    (SCALE.md §r16 negative result)."""
+    from imperio_patitas_etl_spark.operators.checkpoint import (
+        persistent_rdd_ids,
+        release_rdds,
+    )
+
+    before = persistent_rdd_ids(spark)
+    timings: dict[str, float] = {}
+    for key in keys:
+        t0 = time.perf_counter()
+        df = qs[key](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        timings[key] = round(time.perf_counter() - t0, 3)
+    release_rdds(spark, persistent_rdd_ids(spark) - before)
+    return timings
+
+
 def fit_stdout_line(
     stdout_out: dict, top_slowest: list[tuple[str, float]], limit: int = 1500
 ) -> str:
@@ -417,7 +434,9 @@ def fit_stdout_line(
         # front-clipped null.
         minimal = {
             k: stdout_out[k]
-            for k in ("metric", "value", "unit", "sf", "all_total", "n_keys")
+            for k in (
+                "metric", "value", "unit", "sf", "sf_dir", "cpus", "all_total", "n_keys"
+            )
             if k in stdout_out
         }
         line = json.dumps(minimal) + "\n"

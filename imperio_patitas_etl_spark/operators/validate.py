@@ -7,7 +7,9 @@ compiled to ``filter(...).select(...)`` — Catalyst pushes the predicates
 into the scan and prunes unused columns, and the whole thing stays inside
 whole-stage codegen. The "logged reason" becomes a first-class rejects
 DataFrame (reason column included), replacing log-grepping with a queryable
-data-quality output.
+data-quality output. Both outputs are filters over one tagged frame (the
+input plus ``reject_reason``), so a caller that persists it evaluates the
+source and the rules once for the accepted rows, the rejects and the counts.
 """
 
 from __future__ import annotations
@@ -53,44 +55,63 @@ class EntitySpec:
             pred = pred & F.coalesce(r.predicate, F.lit(False))
         return pred
 
-    def apply(self, df: DataFrame) -> "ValidationResult":
-        """Split into (accepted-and-projected, rejects-with-reason)."""
-        accepted = df.filter(self.accept_predicate())
-        projected = accepted.select(
-            *[expr.alias(name) for name, expr in self.projection.items()]
-        )
-        if self.warnings:
-            projected = accepted.select(
-                *[expr.alias(name) for name, expr in self.projection.items()],
-                *[
-                    F.coalesce(expr, F.lit(False)).alias(f"warn_{wname}")
-                    for wname, expr in self.warnings.items()
-                ],
-            )
-        # Rejects: first failing rule wins as the reason (reference logs the
-        # first DataValidationError raised, etl_service.py:525-531).
+    def reject_reason(self) -> Column:
+        """Name of the first failing rule, NULL when every rule passes.
+        First failing rule wins, as the reference logs the first
+        DataValidationError raised (etl_service.py:525-531)."""
         reason = F.lit(None).cast("string")
         for r in reversed(self.rules):
             reason = F.when(~F.coalesce(r.predicate, F.lit(False)), F.lit(r.name)).otherwise(
                 reason
             )
-        rejected = df.filter(~self.accept_predicate()).withColumn("reject_reason", reason)
-        return ValidationResult(accepted=projected, rejected=rejected)
+        return reason
 
-    def project_only(self, df: DataFrame) -> DataFrame:
-        """filter + project without the warning columns (the common path)."""
-        return df.filter(self.accept_predicate()).select(
-            *[expr.alias(name) for name, expr in self.projection.items()]
+    def apply(self, df: DataFrame) -> "ValidationResult":
+        """Validate once: tag every input row with its ``reject_reason``
+        (NULL = accepted) and derive both outputs from that one frame.
+
+        ``accepted`` filters with the AND-form ``accept_predicate()``, not
+        ``reject_reason IS NULL``: the AND of plain column predicates
+        pushes through the tagging projection into the scan
+        (``PushedFilters``), the CASE chain would not. Both forms select
+        the same rows, and a persisted ``tagged`` frame still serves the
+        accepted plan, since the cache matches on the analyzed plan.
+        """
+        tagged = df.withColumn("reject_reason", self.reject_reason())
+        accepted = tagged.filter(self.accept_predicate()).select(
+            *[expr.alias(name) for name, expr in self.projection.items()],
+            *[
+                F.coalesce(expr, F.lit(False)).alias(f"warn_{wname}")
+                for wname, expr in self.warnings.items()
+            ],
         )
+        rejected = tagged.filter(F.col("reject_reason").isNotNull())
+        return ValidationResult(tagged=tagged, accepted=accepted, rejected=rejected)
 
 
 @dataclass
 class ValidationResult:
+    #: the input plus ``reject_reason`` (NULL = accepted); the one frame a
+    #: caller persists to evaluate the validation once
+    tagged: DataFrame
     accepted: DataFrame
     rejected: DataFrame
 
+    def _tally(self) -> DataFrame:
+        rr = F.col("reject_reason")
+        return self.tagged.agg(
+            F.count_if(rr.isNull()).alias("valid"),
+            F.count_if(rr.isNotNull()).alias("invalid"),
+        )
+
+    def valid_invalid(self) -> tuple[int, int]:
+        """(valid, invalid) from one aggregate over the tagged frame."""
+        row = self._tally().first()
+        return row["valid"], row["invalid"]
+
     def counts(self) -> DataFrame:
-        """A3: valid/invalid counters as a DataFrame (etl_service.py:522-533)."""
-        a = self.accepted.select(F.lit("valid").alias("status")).groupBy("status").count()
-        r = self.rejected.select(F.lit("invalid").alias("status")).groupBy("status").count()
-        return a.unionByName(r)
+        """A3: valid/invalid counters as a DataFrame (etl_service.py:522-533),
+        one aggregate over the tagged frame."""
+        return self._tally().selectExpr(
+            "stack(2, 'valid', valid, 'invalid', invalid) AS (status, count)"
+        )

@@ -25,18 +25,23 @@ emission date, so this predicate prunes whole partitions.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from imperio_patitas_etl_spark.operators.validate import ValidationResult
 from imperio_patitas_etl_spark.plans.entities import (
     transform_clients,
     transform_documents,
     transform_products,
 )
 from imperio_patitas_etl_spark.sinks.warehouse import ParquetWarehouse
+
+log = logging.getLogger(__name__)
 
 SourceFn = Callable[[], DataFrame]
 
@@ -57,43 +62,50 @@ class EtlPipeline:
     _report_rows: list[tuple[str, int, int]] = field(default_factory=list)
 
     # -- entity syncs -----------------------------------------------------
+    #
+    # Each sync evaluates an entity once: the validation's tagged frame is
+    # persisted, one aggregate takes valid and invalid (and fills the
+    # cache), and the upsert reads the accepted rows from the cache, so
+    # neither the partition-day list nor the merge re-runs the extract,
+    # explode, joins and rules. The frames are released on every exit,
+    # raises included.
 
     def sync_clients(self) -> int:
         """sync_clients (etl_service.py:508-547): validate → upsert cliente."""
         self.warehouse.ensure_all()
         res = transform_clients(self.sources["clients"]())
-        accepted = res.accepted.drop(*self._warn_cols(res.accepted))
-        n_valid, n_invalid = accepted.count(), res.rejected.count()
-        self._report_rows.append(("cliente", n_valid, n_invalid))
-        if n_valid:  # F6: skip load when 0 valid rows (etl_service.py:535-537)
-            self.warehouse.upsert("cliente", accepted)
+        with ExitStack() as held:
+            accepted, n_valid, _ = self._evaluate(held, "cliente", res)
+            if n_valid:  # F6: skip load when 0 valid rows (etl_service.py:535-537)
+                self.warehouse.upsert("cliente", accepted)
         return n_valid
 
     def sync_products(self) -> int:
-        """sync_products (etl_service.py:550-649). Raises when every row is
-        invalid (the reference treats an all-invalid product sync as fatal,
-        :637-639)."""
+        """sync_products (etl_service.py:550-649): validate → upsert
+        producto. Raises when every row is invalid (the reference treats
+        an all-invalid product sync as fatal, :637-639)."""
         self.warehouse.ensure_all()
         res = transform_products(
             self.sources["products"](),
             self.sources["price_list"](),
             self.sources["costs"](),
         )
-        accepted = res.accepted.drop(*self._warn_cols(res.accepted))
-        n_valid, n_invalid = accepted.count(), res.rejected.count()
-        self._report_rows.append(("producto", n_valid, n_invalid))
-        if n_valid == 0 and n_invalid > 0:
-            raise ValueError("product sync: all rows invalid")
-        if n_valid:
-            self.warehouse.upsert("producto", accepted)
+        with ExitStack() as held:
+            accepted, n_valid, n_invalid = self._evaluate(held, "producto", res)
+            if n_valid == 0 and n_invalid > 0:
+                raise ValueError("product sync: all rows invalid")
+            if n_valid:
+                self.warehouse.upsert("producto", accepted)
         return n_valid
 
     def sync_documents(self, start_date: str | None = None) -> int:
         """sync_documents (etl_service.py:652-722): one input, two tables.
 
-        ``start_date`` (YYYY-MM-DD) filters on emission date — the predicate
-        the reference plumbed through but never implemented
-        (bsale_client.py:69-71).
+        The headers are evaluated first; the lines explode the documents
+        whose ids are among the cached accepted headers, and are
+        evaluated second. ``start_date`` (YYYY-MM-DD) filters on emission
+        date — the predicate the reference plumbed through but never
+        implemented (bsale_client.py:69-71).
         """
         self.warehouse.ensure_all()
         raw = self.sources["documents"]()
@@ -103,17 +115,28 @@ class EtlPipeline:
                 >= F.to_timestamp(F.lit(start_date))
             )
         headers, lines = transform_documents(raw)
-        h_acc = headers.accepted.drop(*self._warn_cols(headers.accepted))
-        l_acc = lines.accepted.drop(*self._warn_cols(lines.accepted))
-        n_h, n_hr = h_acc.count(), headers.rejected.count()
-        n_l, n_lr = l_acc.count(), lines.rejected.count()
-        self._report_rows.append(("documento_venta", n_h, n_hr))
-        self._report_rows.append(("detalle_documento", n_l, n_lr))
-        if n_h:
-            self.warehouse.upsert("documento_venta", h_acc)
-        if n_l:
-            self.warehouse.upsert("detalle_documento", l_acc)
+        with ExitStack() as held:
+            h_acc, n_h, _ = self._evaluate(held, "documento_venta", headers)
+            l_acc, n_l, _ = self._evaluate(held, "detalle_documento", lines)
+            if n_h:
+                self.warehouse.upsert("documento_venta", h_acc)
+            if n_l:
+                self.warehouse.upsert("detalle_documento", l_acc)
         return n_h
+
+    def _evaluate(
+        self, held: ExitStack, entity: str, res: ValidationResult
+    ) -> tuple[DataFrame, int, int]:
+        """Persist ``res.tagged`` until ``held`` closes, count valid and
+        invalid in one aggregate (the action that fills the cache), record
+        them in the report, and return the accepted rows without their
+        warning flags."""
+        res.tagged.persist()
+        held.callback(res.tagged.unpersist)
+        n_valid, n_invalid = res.valid_invalid()
+        self._report_rows.append((entity, n_valid, n_invalid))
+        accepted = res.accepted.drop(*self._warn_cols(res.accepted))
+        return accepted, n_valid, n_invalid
 
     # -- orchestration (endpoints.py:50-106, scheduler_endpoints.py) ------
 
@@ -151,15 +174,21 @@ class EtlPipeline:
 
     def mirror(self, tables) -> bool:
         """K5 mirror of the named warehouse tables (sheets_sync.py:49-59).
-        Returns False (and keeps going) on any export error — the mirror
-        must never fail the sync (etl_service.py:737-741)."""
+        An export error is logged as a warning with the table and the
+        error text, and the remaining tables are still mirrored; the
+        result is False if any table failed. The mirror never fails the
+        sync (etl_service.py:737-741)."""
         if self.exporter is None:
             return True
         ok = True
         for table in tables:
             try:
                 self.exporter(table, self.warehouse.export_stringified(table))
-            except Exception:
+            except Exception as exc:
+                log.warning(
+                    "mirror of %s failed: %s: %s", table, type(exc).__name__, exc,
+                    exc_info=exc,
+                )
                 ok = False
         return ok
 

@@ -63,7 +63,7 @@ _MODULES = (
 )
 
 # Round-19 window (exactly the 50 keys the driver samples). Rule (a):
-# 15 keys changed implementation this round (the r19 OPTIMIZATION pass,
+# 15 keys changed implementation in round 19 (the r19 OPTIMIZATION pass,
 # fingerprint-detected by tools/rotation.py): the ngram-Jaccard family
 # moved to the grouped build (rep arrays + skinny member map, star
 # convergence probe folded to one aggregate); the Gopher kernel's
@@ -73,25 +73,31 @@ _MODULES = (
 # cosine_dedup_recall — the shared-v parameter also flips the three
 # search builders' fingerprints); embedding_dup_clusters runs CC over
 # pair endpoints only; quantile_sketch checkpoints its bounded sample.
-# All 15 lead the window; the rest is the rule-(b) stalest cohort
-# (window_running_sum r14, then the r15 block in key order).
+# Since the r19 boundary, validation became one tagged frame
+# (EntitySpec.apply) and the partitioned MERGE writes over all cores,
+# which flips the four filter_project_* keys and upsert_merge: they lead
+# the window. Rule (c) rotated out five r19 keys that the driver
+# certified green in both r18 and r19 and that have not changed since.
+# The rest is the rule-(b) stalest cohort (window_running_sum r14, then
+# the r15 block in key order).
 _R19_FRONT = (
-    # -- rule (a): implementation changed this round (15)
+    # -- rule (a): implementation changed since the r19 boundary (5)
+    "filter_project_client",
+    "filter_project_detail",
+    "filter_project_document",
+    "filter_project_product",
+    "upsert_merge",
+    # -- rule (a) of round 19, less the five rotated out by rule (c) (10)
     "ann_ivf",
     "ann_ivf_trained",
     "ann_lsh_bucketed",
-    "ann_recall",
     "ann_topk_bruteforce",
     "corpus_keep_list",
     "cosine_dedup_recall",
-    "dedup_minhash_lsh",
     "dup_clusters",
     "dup_clusters_star",
     "embedding_dup_clusters",
-    "gopher_filter",
     "ngram_jaccard_dedup",
-    "quality_gopher",
-    "quantile_sketch",
     # -- rule (b) refresh: stalest driver rows (35)
     "window_running_sum",
     "arith_derived",

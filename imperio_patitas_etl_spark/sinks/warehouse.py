@@ -419,9 +419,19 @@ class ParquetWarehouse:
     def _upsert_partitioned(
         self, table: str, src: DataFrame, key: str, part_name: str
     ) -> None:
-        """Partition-scoped MERGE: read only touched partitions, merge,
+        """Partition-scoped MERGE: list the touched days from ``src``, read
+        only those partitions, merge, stage the result, and
         dynamic-overwrite exactly those partitions. Requires the partition
-        key to be stable per merge key (PARTITION_SPEC contract)."""
+        key to be stable per merge key (PARTITION_SPEC contract).
+
+        ``src`` is read twice (the day list and the merge), so a caller
+        that persists it evaluates its plan once. The stage is small and
+        reads back as one task; the overwrite hash-partitions it by day
+        over ``defaultParallelism`` tasks, so the partition files are
+        written on all cores. Each day still lands in one task, which
+        keeps one file per partition, the layout ``compact()`` produces.
+        The count is explicit because AQE coalesces a plain
+        ``repartition(col)`` of a small stage back to one task."""
         src = self._with_part(table, src)
         days = [r[0] for r in src.select(part_name).distinct().collect()]
         # NULL partition values (NULL timestamp → __HIVE_DEFAULT_PARTITION__)
@@ -456,6 +466,9 @@ class ParquetWarehouse:
                 if any(d is None for d in changed):
                     ccond = ccond | F.col(part_name).isNull()
                 staged = staged.filter(ccond)
+        staged = staged.repartition(
+            self.spark.sparkContext.defaultParallelism, F.col(part_name)
+        )
         (
             staged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -9,8 +9,12 @@ parser — a typo'd ``--al`` was silently dropped, turning an intended
 full-registry sf1 sweep into a headline-only one. Arg-error paths exit
 before any pyspark import (asserted structurally, no Spark markers).
 
-No Spark needed: ``fit_stdout_line`` is pure; the CLI cases exit during
-argument handling.
+Plus the run-record fields: the line echoes ``cpus`` and ``sf_dir`` at
+every shrink level, and each ``--repeats`` pass releases the RDDs it left
+persisted once, after its last key.
+
+``fit_stdout_line`` is pure and the CLI cases exit during argument
+handling; only the pass test uses the Spark session.
 """
 
 from __future__ import annotations
@@ -20,8 +24,10 @@ import os
 import subprocess
 import sys
 
-from bench import fit_stdout_line
+from bench import fit_stdout_line, timed_pass
 from conftest import assert_no_spark_startup
+
+from imperio_patitas_etl_spark.operators.checkpoint import persistent_rdd_ids
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -74,6 +80,8 @@ def _summary(n_keys: int, key_len: int = 20) -> tuple[dict, list]:
         "unit": "sec",
         "queries": dict(top),
         "sf": 0.1,
+        "sf_dir": "/data/sf0.1",
+        "cpus": 4,
         "all_total": 184.752,
         "n_keys": 175,
         "queries_full": "BENCH_out.json",
@@ -131,3 +139,36 @@ def test_real_r10_shaped_line_is_stable():
     out, top = _summary(10)
     line = fit_stdout_line(dict(out), top)
     assert len(line) < 600
+
+
+def test_every_shrink_level_echoes_cpus_and_sf_dir():
+    for key_len, blowout in ((20, False), (400, False), (2000, False), (20, True)):
+        out, top = _summary(10, key_len=key_len)
+        if blowout:
+            out["queries_full"] = "B" * 3000
+        parsed = json.loads(fit_stdout_line(dict(out), top))
+        assert parsed["cpus"] == 4
+        assert parsed["sf_dir"] == "/data/sf0.1"
+
+
+def test_timed_pass_releases_its_persisted_rdds_once_at_the_end(spark):
+    seen_by_second_key = []
+
+    def checkpointing(spark, sf_dir):
+        return spark.range(0, 100, 1, 2).localCheckpoint()
+
+    def observing(spark, sf_dir):
+        seen_by_second_key.append(persistent_rdd_ids(spark) - before)
+        return spark.range(10)
+
+    qs = {"checkpointing": checkpointing, "observing": observing}
+    before = persistent_rdd_ids(spark)
+    for _ in range(2):
+        seen_by_second_key.clear()
+        timings = timed_pass(spark, qs, ["checkpointing", "observing"], "unused")
+        assert set(timings) == {"checkpointing", "observing"}
+        # not released per key: the first key's block is still held
+        # while the second key runs ...
+        assert len(seen_by_second_key[0]) == 1
+        # ... and released before the next pass starts
+        assert persistent_rdd_ids(spark) == before

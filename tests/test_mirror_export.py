@@ -3,6 +3,8 @@ full sync; export errors must never fail the sync."""
 
 from __future__ import annotations
 
+import logging
+
 from imperio_patitas_etl_spark.plans.pipeline import EtlPipeline
 from imperio_patitas_etl_spark.sinks.warehouse import ParquetWarehouse
 
@@ -72,3 +74,18 @@ def test_mirror_error_is_non_fatal(spark, tmp_path):
     p.sync("all")  # must not raise
     assert p.mirror_all() is False
     assert p.warehouse.read("cliente").count() == 1
+
+
+def test_mirror_error_is_logged_with_table_and_text(spark, tmp_path, caplog):
+    def flaky(name, rows):
+        if name == "producto":
+            raise RuntimeError("sheets quota exceeded")
+
+    p = _mini_pipeline(spark, tmp_path, flaky)
+    p.warehouse.ensure_all()
+    with caplog.at_level(logging.WARNING, logger="imperio_patitas_etl_spark.plans.pipeline"):
+        assert p.mirror(("cliente", "producto", "documento_venta")) is False
+    failed = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(failed) == 1
+    assert "producto" in failed[0].getMessage()
+    assert "sheets quota exceeded" in failed[0].getMessage()

@@ -130,3 +130,65 @@ def test_null_partition_rows_survive_upsert(wh, spark):
     rows = {r["id_documento"]: r for r in wh.read("documento_venta").collect()}
     assert set(rows) == {1, 2, 3, 4}
     assert rows[1]["id_cliente"] == 99 and rows[1]["monto_total"] == 238.0
+
+
+def _day(d: int) -> str:
+    return f"2024-02-{d:02d} 10:00:00"
+
+
+def _parquet_files(wh, table):
+    p = wh.path(table)
+    return {
+        d: [f for f in os.listdir(os.path.join(p, d)) if f.endswith(".parquet")]
+        for d in os.listdir(p)
+        if d.startswith("fecha_dia=")
+    }
+
+
+def test_upsert_spanning_more_days_than_cores_writes_one_file_per_day(wh, spark):
+    n_days = 3 * spark.sparkContext.defaultParallelism
+    wh.overwrite(
+        "documento_venta",
+        _docs(spark, [(i, 10, i, _day(1 + i % n_days), 119.0) for i in range(2 * n_days)]),
+    )
+    # updates every existing document's day and adds as many new rows
+    wh.upsert(
+        "documento_venta",
+        _docs(spark, [(i, 99, i, _day(1 + i % n_days), 238.0) for i in range(n_days, 3 * n_days)]),
+    )
+    files = _parquet_files(wh, "documento_venta")
+    assert len(files) == n_days
+    assert all(len(f) == 1 for f in files.values())
+    # the days were written by more than one task (part-<task>-...)
+    assert len({f[0].split("-")[1] for f in files.values()}) > 1
+    rows = {
+        r["id_documento"]: (r["id_cliente"], r["monto_total"])
+        for r in wh.read("documento_venta").collect()
+    }
+    assert rows == {
+        i: (10, 119.0) if i < n_days else (99, 238.0) for i in range(3 * n_days)
+    }
+
+
+def test_local_session_lists_partitions_on_the_driver(wh, spark):
+    # more day directories than Spark's default parallel-listing
+    # threshold (32): a local session still lists them without a job
+    wh.overwrite(
+        "detalle_documento",
+        spark.createDataFrame(
+            [(i, i, 1, 1.0, 1.0, 0.0, 1.0, f"2024-{1 + i // 28:02d}-{1 + i % 28:02d}")
+             for i in range(40)],
+            "id_detalle long, id_documento long, id_producto long, cantidad double, "
+            "precio_neto_unitario double, descuento_porcentual double, "
+            "monto_total_linea double, fecha_creacion string",
+        ).withColumn("fecha_creacion", F.to_timestamp("fecha_creacion")),
+    )
+    assert len(_parquet_files(wh, "detalle_documento")) == 40
+    sc = spark.sparkContext
+    sc.setJobGroup("partition-listing", "listing")
+    try:
+        wh.read("detalle_documento")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("partition-listing")) == []

@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from imperio_patitas_etl_spark.operators.checkpoint import persistent_rdd_ids
 from imperio_patitas_etl_spark.plans.pipeline import EtlPipeline
 from imperio_patitas_etl_spark.sinks.warehouse import ParquetWarehouse
 
@@ -206,3 +207,31 @@ def test_column_subset_update_documento(pipeline, spark):
     assert row["id_cliente"] == 999      # updated column
     assert row["monto_neto"] == 2000.0   # updated column
     assert row["folio"] == 7             # NOT in update set → target wins
+
+
+def test_syncs_evaluate_once_and_release_their_cache(pipeline, spark, monkeypatch):
+    """Each sync persists its validated frames, feeds the upserts from
+    that cache, and releases it on every exit: after a full sync, after a
+    windowed documents sync, and after the all-invalid products raise."""
+    wh = pipeline.warehouse
+    plans = []
+    upsert = type(wh).upsert
+
+    def recording_upsert(self, table, source):
+        plans.append(source._jdf.queryExecution().executedPlan().toString())
+        upsert(self, table, source)
+
+    monkeypatch.setattr(type(wh), "upsert", recording_upsert)
+    before = persistent_rdd_ids(spark)
+    pipeline.sync("all")
+    assert len(plans) == 4 and all("InMemoryTableScan" in p for p in plans)
+    assert persistent_rdd_ids(spark) == before
+    pipeline.sync_documents(start_date="2023-11-14")
+    assert persistent_rdd_ids(spark) == before
+    pipeline.sources["products"] = lambda: spark.createDataFrame(
+        [(0, 9, "Malo", None, 1700000000, ([(101, None, None, 0, True)],))],
+        PRODUCT_SCHEMA,
+    )
+    with pytest.raises(ValueError, match="all rows invalid"):
+        pipeline.sync_products()
+    assert persistent_rdd_ids(spark) == before

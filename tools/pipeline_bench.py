@@ -35,6 +35,9 @@ Timed phases (printed as one JSON line, appended to BASELINE.md):
                  exceptAll in both directions == 0)
 
 Usage: python tools/pipeline_bench.py [sf_dir] (default testdata sf0.1)
+
+The session is the engine's own (``session.get_spark``): local[N] with N
+from $SPARK_GRAFT_CPUS or the machine's CPU count, and its heap default.
 """
 
 from __future__ import annotations
@@ -289,18 +292,11 @@ def main() -> None:
     if not os.path.isdir(sf_dir):
         ap.error(f"no such sf_dir: {sf_dir}")
 
-    from pyspark.sql import SparkSession
-
     from imperio_patitas_etl_spark.plans.pipeline import EtlPipeline
+    from imperio_patitas_etl_spark.session import get_spark
     from imperio_patitas_etl_spark.sinks.warehouse import ParquetWarehouse
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("pipeline_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.time()
